@@ -20,8 +20,8 @@ from .functions import similarity as fsim
 from .functions import text as ftext
 from .operators.merge import merge_upsert
 from .operators.parse import parse_envelope, split_rejects
-from .operators.reassemble import held_back, held_back_full, reassemble_sql
-from .plans.pipeline import run_pipeline
+from .operators.reassemble import _gate_flags
+from .plans.pipeline import plan_from_flags, run_pipeline
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -36,7 +36,6 @@ def _pipeline(spark: SparkSession, sf_dir: str):
         chunker.chunks(docs),
         chunker.routes_table(docs),
         chunker.checkpoint_table(docs),
-        strategy="sql",
     )
 
 
@@ -92,10 +91,7 @@ def q_pipeline_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_held_back(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = chunker.load_documents(spark, sf_dir)
-    return held_back(
-        parse_envelope(chunker.chunks(docs)), chunker.checkpoint_table(docs)
-    ).select("doc_id", "session", "seq")
+    return _pipeline(spark, sf_dir).held.select("doc_id", "session", "seq")
 
 
 def q_pipeline_checkpoint_out(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,17 +135,19 @@ def q_pipeline_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = chunker.load_documents(spark, sf_dir)
     parsed = parse_envelope(chunker.chunks(docs))
     ckpt0 = chunker.checkpoint_table(docs)
+    routes = chunker.routes_table(docs)
 
     p1 = parsed.where(F.col("seq") <= 2)
     p2 = parsed.where(F.col("seq") > 2)
 
-    r1 = reassemble_sql(p1, ckpt0)
-    held1 = held_back_full(p1, ckpt0)
-    ck1 = r1.selectExpr("doc_id", "session", "cast(last_seq_out as long) as last_seq")
+    phase1 = plan_from_flags(_gate_flags(p1, ckpt0), routes)
+    r1, ck1 = phase1.reassembled, phase1.checkpoint_out
     ckpt1 = ck1.unionByName(
         ckpt0.join(ck1.select("doc_id", "session"), ["doc_id", "session"], "left_anti")
     )
-    r2 = reassemble_sql(p2.unionByName(held1), ckpt1)
+    r2 = plan_from_flags(
+        _gate_flags(p2.unionByName(phase1.held), ckpt1), routes
+    ).reassembled
 
     seg = r1.withColumn("run", F.lit(1)).unionByName(r2.withColumn("run", F.lit(2)))
     return (

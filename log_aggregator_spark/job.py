@@ -11,16 +11,22 @@ promoted to a cluster batch job:
 2. run parse → gate against the persisted checkpoint table
    (``SequenceTracker`` analog) and MATERIALIZE the gate decision once to a
    staging snapshot,
-3. derive routed output, new checkpoint, new held cache and metrics from
-   that one materialized result, and commit all four in ONE atomic
-   TableGroup manifest swap.
+3. derive routed output, new checkpoint and new held cache from that one
+   materialized result through ``plans.pipeline.plan_from_flags`` (the
+   plan function ``run_pipeline`` uses too), add what only the job owns — the
+   run_id column, held aging/quarantine, the checkpoint merge — and commit
+   them with the metrics in ONE atomic TableGroup manifest swap,
+4. delete the staging snapshot and take the returned per-sink counts from
+   the routed files that commit added.
 
 Consistency: the gate plan contains an ``asNondeterministic`` Arrow UDF and
 order-sensitive tie-breaks, so deriving each state table from its own
 recomputation would let task retries/speculation hand different inputs to
 different commits. Materializing ``_gate_flags`` once means routed,
-checkpoint, held and the count summary all observe the SAME physical rows —
-and the pass reads the parse output once instead of 4-5 times.
+checkpoint and held all observe the SAME physical rows, and the returned
+counts are read back from what was committed. Known cost: the ``rejects``
+member is not derived from that parse — its plan re-runs the parse UDF
+over every new envelope at commit time, even when nothing is rejected.
 
 Crash safety: the single TableGroup commit has NO duplicate-append window —
 either the CURRENT swap happened (all four tables advanced together) or it
@@ -30,7 +36,9 @@ documented window between payload append and ``.lastSeq`` write
 (``DataPumpDecoderSort.java:48-51``) is thereby closed, not just made
 detectable. Concurrent committers are excluded by the manifest CAS
 (``tableio.ConcurrentCommitError``); the run_id column (= chunks snapshot
-processed) remains as the audit/idempotency key.
+processed) remains as the audit/idempotency key. A pass with only held
+input (no new chunks) reuses the chunks snapshot id of the pass before it,
+so two passes can share a run_id.
 
 Output invariant (tested in tests/test_job_resume.py): for every
 (doc_id, session), the concatenation of routed token segments in run order
@@ -50,12 +58,8 @@ from pyspark.sql import functions as F
 
 from .lineage import lineage_from_files, lineage_records
 from .operators.aggregate import sink_counts
-from .operators.enrich import enrich
-from .operators.reassemble import (
-    _gate_flags,
-    held_from_flags,
-    reassemble_from_flags,
-)
+from .operators.reassemble import _gate_flags
+from .plans.pipeline import plan_from_flags
 from .tableio import SnapshotTable, TableGroup
 
 
@@ -208,12 +212,8 @@ def _run_job_once(
     _sweep_stale_staging(state.staging_root)
     staging = f"{state.staging_root}/{uuid.uuid4().hex}"
     _gate_flags(parsed, ckpt_df).write.mode("overwrite").parquet(staging)
-    flagged = spark.read.parquet(staging)
-
-    reassembled = reassemble_from_flags(flagged)
-    enriched = enrich(reassembled, routes).withColumn(
-        "run_id", F.lit(run_id).cast("long")
-    )
+    plan = plan_from_flags(spark.read.parquet(staging), routes)
+    enriched = plan.enriched.withColumn("run_id", F.lit(run_id).cast("long"))
 
     # held cache with age tracking: a chunk held before keeps its original
     # first_held_run (in group-pass units); a newly-held one is stamped with
@@ -221,7 +221,7 @@ def _run_job_once(
     # BOUNDED (held_max_age_runs set): with the unbounded default the held
     # table is exactly the one documented as growing without limit, and
     # force-broadcasting it risks driver OOM at scale — let AQE choose.
-    held_full = held_from_flags(flagged)
+    held_full = plan.held
     if prev_held is not None and "first_held_run" in prev_held.columns:
         prev_ages = prev_held.select("doc_id", "session", "seq", "first_held_run")
         if held_max_age_runs is not None:
@@ -247,9 +247,7 @@ def _run_job_once(
 
     # checkpoint merge: streams that emitted this run advance; the rest keep
     # their old state. Broadcast-friendly (one row per live stream).
-    new_ckpt = reassembled.selectExpr(
-        "doc_id", "session", "cast(last_seq_out as long) as last_seq"
-    )
+    new_ckpt = plan.checkpoint_out
     if ckpt_df is not None:
         keep = ckpt_df.join(
             new_ckpt.select("doc_id", "session"), ["doc_id", "session"],
@@ -275,7 +273,7 @@ def _run_job_once(
     if quarantined is not None:
         tables["quarantine"] = (quarantined, "append")
     try:
-        state.group.commit(
+        snap = state.group.commit(
             tables,
             lineage={
                 "chunks_snapshot": current_snap,
@@ -284,9 +282,6 @@ def _run_job_once(
                 "wall_sec": wall,
             },
         )
-        counts = {
-            r["sink"]: r["n_rows"] for r in sink_counts(enriched).collect()
-        }
     finally:
         # the staging snapshot is pass-local scratch: committed data was
         # rewritten into the group's data dirs, and a failed/aborted commit
@@ -296,6 +291,14 @@ def _run_job_once(
         import shutil
 
         shutil.rmtree(staging, ignore_errors=True)
+
+    # sink counts over the routed files THIS commit added (the manifest
+    # diff against its parent), not a run_id filter: a pass with only held
+    # input reuses the previous pass's run_id.
+    routed_added = state.routed.read_incremental(spark, snap - 1 or None, snap)
+    counts = {} if routed_added is None else {
+        r["sink"]: r["n_rows"] for r in sink_counts(routed_added).collect()
+    }
 
     return {
         "run_id": run_id,

@@ -60,3 +60,43 @@ def reassemble_oracle(
         out,
         columns=["doc_id", "session", "tokens", "n_tok", "source", "last_seq_out"],
     )
+
+
+def held_oracle(
+    chunks: pd.DataFrame, checkpoint: pd.DataFrame | None = None
+) -> pd.DataFrame:
+    """The chunks a run leaves for a later pass, same inputs as
+    ``reassemble_oracle``: per stream, every distinct live seq (above the
+    checkpoint) that the gate loop did not emit, with the survivor payload.
+    Returns (doc_id, session, seq, chunk_tokens[list], source)."""
+    ckpt: dict[tuple, int] = {}
+    if checkpoint is not None:
+        for r in checkpoint.itertuples(index=False):
+            ckpt[(r.doc_id, r.session)] = int(r.last_seq)
+
+    out = []
+    for (doc_id, session), g in chunks.groupby(["doc_id", "session"], sort=True):
+        last = ckpt.get((doc_id, session), 0)
+        seen = set()
+        cur = last
+        g = g.assign(_pk=g["chunk_tokens"].map(tuple)).sort_values(["seq", "_pk"])
+        for r in g.itertuples(index=False):
+            s = int(r.seq)
+            if s in seen:
+                continue
+            seen.add(s)
+            if s == cur + 1 or cur == 0:
+                cur = s
+            elif s > last:  # seq ≤ last was consumed by an earlier run
+                out.append(
+                    {
+                        "doc_id": doc_id,
+                        "session": session,
+                        "seq": s,
+                        "chunk_tokens": [int(t) for t in r.chunk_tokens],
+                        "source": r.source,
+                    }
+                )
+    return pd.DataFrame(
+        out, columns=["doc_id", "session", "seq", "chunk_tokens", "source"]
+    )

@@ -827,10 +827,15 @@ def _bucket_expr(b: int, v: str = "v") -> str:
 
 def _similarity_sql() -> dict[str, str]:
     bands = "\n  UNION ALL ".join(
-        f"SELECT vec_id, v, n2, CAST({b} AS BIGINT) AS band, "
+        f"SELECT vec_id, CAST({b} AS BIGINT) AS band, "
         f"{_bucket_expr(b)} AS bucket FROM n"
         for b in range(_sim.N_BANDS)
     )
+    # bands carry ids only: the band join and the pair grouping never touch
+    # the vectors, which are attached once per candidate pair afterwards
+    # (the same shape as similarity's Spark plan). Dragging ``v`` through
+    # the multi-probe join and ``any_value(v)`` made DuckDB hold ~12 GB
+    # for sim_lsh_topk at sf0.01, outside its memory_limit.
     banded = f", bk AS (\n  {bands}\n)"
     # multi-probe expansion of the probe (query) side — mirrors
     # similarity.lsh_probe_keys: base bucket + one-bit flips
@@ -838,12 +843,29 @@ def _similarity_sql() -> dict[str, str]:
     if _sim.MULTIPROBE:
         banded += f""",
 pk AS (
-  SELECT vec_id, v, n2, band, xor(bucket, CAST(m AS BIGINT)) AS bucket
+  SELECT vec_id, band, xor(bucket, CAST(m AS BIGINT)) AS bucket
   FROM bk, (SELECT unnest({masks}) AS m)
 )"""
         probe_side = "pk"
     else:
         probe_side = "bk"
+
+    def cand(cmp: str, where: str = "") -> str:
+        """Candidate pairs (vec_id, nb_id, n_bands, sim): band-join and group
+        on ids, then attach both vectors."""
+        return f"""(
+    SELECT c.vec_id, c.nb_id, c.n_bands,
+           list_dot_product(na.v, nb.v) / sqrt(na.n2 * nb.n2) AS sim
+    FROM (
+      SELECT a.vec_id, b.vec_id AS nb_id, CAST(count(*) AS BIGINT) AS n_bands
+      FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
+                         AND a.vec_id {cmp} b.vec_id
+      {where}
+      GROUP BY a.vec_id, b.vec_id
+    ) c
+    JOIN n na ON na.vec_id = c.vec_id
+    JOIN n nb ON nb.vec_id = c.nb_id
+  )"""
     return {
         "sim_brute_topk": _SIM_PRELUDE
         + f"""
@@ -873,13 +895,7 @@ n AS (SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM d)
 SELECT vec_a, vec_b, n_bands,
        CAST(floor(sim * 1000000) AS BIGINT) AS sim_x1m
 FROM (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         CAST(count(*) AS BIGINT) AS n_bands,
-         list_dot_product(any_value(a.v), any_value(b.v))
-           / sqrt(any_value(a.n2) * any_value(b.n2)) AS sim
-  FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                     AND a.vec_id < b.vec_id
-  GROUP BY a.vec_id, b.vec_id
+  SELECT vec_id AS vec_a, nb_id AS vec_b, n_bands, sim FROM {cand("<")}
 ) WHERE sim >= {_sim.LSH_TAU}
 """,
         "sim_lsh_topk": f"""
@@ -890,14 +906,7 @@ SELECT vec_id, CAST(rank AS BIGINT) AS rank, neighbor_id
 FROM (
   SELECT vec_id, nb_id AS neighbor_id,
          row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, nb_id) AS rank
-  FROM (
-    SELECT a.vec_id, b.vec_id AS nb_id,
-           list_dot_product(any_value(a.v), any_value(b.v))
-             / sqrt(any_value(a.n2) * any_value(b.n2)) AS sim
-    FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                       AND a.vec_id <> b.vec_id
-    GROUP BY a.vec_id, b.vec_id
-  )
+  FROM {cand("<>")}
 ) WHERE rank <= {_sim.LSH_TOPK}
 """,
         # recall over the deterministic 4/16 query-vector sample (mirrors
@@ -916,15 +925,7 @@ approx AS (
   SELECT vec_id, neighbor_id FROM (
     SELECT vec_id, nb_id AS neighbor_id,
            row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, nb_id) AS rank
-    FROM (
-      SELECT a.vec_id, b.vec_id AS nb_id,
-             list_dot_product(any_value(a.v), any_value(b.v))
-               / sqrt(any_value(a.n2) * any_value(b.n2)) AS sim
-      FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                         AND a.vec_id <> b.vec_id
-      WHERE {_QSAMPLE_PRED.format(col="a.vec_id")}
-      GROUP BY a.vec_id, b.vec_id
-    )
+    FROM {cand("<>", "WHERE " + _QSAMPLE_PRED.format(col="a.vec_id"))}
   ) WHERE rank <= {_sim.LSH_TOPK}
 ),
 j AS (

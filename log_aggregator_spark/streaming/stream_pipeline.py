@@ -13,9 +13,9 @@ The stateful gate holds, per (doc_id, session): ``last_seq`` plus the
 held-back chunks (seqs + token arrays) — the in-state analog of the
 reference leaving unconsumed ``.pbData`` files on disk
 (``datadecoder/README.md:13-15``). Each micro-batch merges state-held
-chunks with new arrivals and replays the SAME pure gate decision the batch
-path uses (``reassemble.gate_select`` — one code path, two engines), so
-batch and streaming results agree segment-for-segment (tested in
+chunks with new arrivals and replays the pure gate decision
+``reassemble.gate_select``, whose semantics the batch window plan shares,
+so batch and streaming results agree segment-for-segment (tested in
 tests/test_streaming.py).
 
 Scale notes: state lives in the state store (RocksDB on a real cluster —

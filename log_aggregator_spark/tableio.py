@@ -442,6 +442,14 @@ class GroupMember:
     def read(self, spark: SparkSession, snapshot: int | None = None) -> DataFrame:
         return self._group.read_member(spark, self.name, snapshot)
 
+    def read_incremental(
+        self, spark: SparkSession, since: int | None, snapshot: int | None = None
+    ) -> DataFrame | None:
+        """Rows added after group snapshot ``since`` (None = everything) up
+        to ``snapshot`` (default: latest), as in
+        ``SnapshotTable.read_incremental``. Returns None when nothing new."""
+        return self._group.read_member_incremental(spark, self.name, since, snapshot)
+
     def exists(self) -> bool:
         return self._group.member_exists(self.name)
 
@@ -586,6 +594,30 @@ class TableGroup:
                 [], schema=_schema_from_json(entry["schema"])
             )
         return spark.read.parquet(*entry["files"])
+
+    def read_member_incremental(
+        self,
+        spark: SparkSession,
+        name: str,
+        since: int | None,
+        snapshot: int | None = None,
+    ) -> DataFrame | None:
+        """Member ``name``'s rows in files present at ``snapshot`` (default:
+        latest) but not at ``since`` — the manifest diff. None when that
+        diff is empty."""
+        snap = snapshot if snapshot is not None else self.current_snapshot()
+        if snap is None or (since is not None and snap <= since):
+            return None
+        entry = self._manifest(snap)["tables"].get(name)
+        if entry is None:
+            return None
+        old: set[str] = set()
+        if since is not None:
+            old = set(self._manifest(since)["tables"].get(name, {}).get("files", []))
+        files = [f for f in entry["files"] if f not in old]
+        if not files:
+            return None
+        return spark.read.parquet(*files)
 
     def lineage(self, snapshot: int | None = None) -> dict:
         snap = snapshot if snapshot is not None else self.current_snapshot()

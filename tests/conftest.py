@@ -29,3 +29,30 @@ def chunks_df(spark, rows):
         pdf,
         schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
     )
+
+
+class FakeState:
+    """Minimal GroupState double for kernel-level tests."""
+
+    def __init__(self, value=None, timed_out=False):
+        self._value = value
+        self.hasTimedOut = timed_out
+        self.removed = False
+        self.timeout_set = None
+
+    @property
+    def exists(self):
+        return self._value is not None and not self.removed
+
+    @property
+    def get(self):
+        return self._value
+
+    def update(self, v):
+        self._value = v
+
+    def remove(self):
+        self.removed = True
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_set = ms

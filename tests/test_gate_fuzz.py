@@ -48,18 +48,13 @@ def test_gate_select_matches_reference_loop(seqs, last):
     assert len(set(map(int, idx))) == len(idx)
 
 
-def test_random_corpus_all_strategies_match_oracle(spark):
+def test_random_corpus_matches_oracle(spark):
     """One seeded random corpus (200 streams × random seq multisets ×
-    random checkpoints) through ALL THREE physical strategies vs the
-    pure-pandas oracle — the Spark-plan fuzz counterpart of the kernel
-    fuzz above."""
+    random checkpoints) through the batch window plan vs the pure-pandas
+    oracle — the Spark-plan fuzz counterpart of the kernel fuzz above."""
     import pandas as pd
 
-    from log_aggregator_spark.operators.reassemble import (
-        reassemble,
-        reassemble_agg,
-        reassemble_sql,
-    )
+    from log_aggregator_spark.operators.reassemble import reassemble_sql
     from log_aggregator_spark.oracle_pandas import reassemble_oracle
 
     rng = np.random.default_rng(7)
@@ -70,7 +65,7 @@ def test_random_corpus_all_strategies_match_oracle(spark):
         seqs = rng.integers(0, 8, size=n)
         for s in seqs:
             # duplicate seqs get DIFFERING payloads (random tail element):
-            # all strategies + the oracle must settle on the SAME
+            # the plan and the oracle must settle on the SAME
             # lexicographically-least survivor, not an arrival artifact
             rows.append(
                 (doc, sess, int(s),
@@ -105,6 +100,5 @@ def test_random_corpus_all_strategies_match_oracle(spark):
         )
 
     want = norm(reassemble_oracle(pdf, cdf if len(cdf) else None))
-    for fn in (reassemble, reassemble_sql, reassemble_agg):
-        got = norm(fn(sdf, sckpt).toPandas())
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    got = norm(reassemble_sql(sdf, sckpt).toPandas())
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)

@@ -123,7 +123,7 @@ def test_two_pass_job_equals_single_run(spark, docs, tmp_path):
 
     # held state: same streams/seqs as the one-shot held set
     held = state.held.read(spark).select("doc_id", "session", "seq")
-    want_held = run_pipeline(chunks, routes).held
+    want_held = run_pipeline(chunks, routes).held.select("doc_id", "session", "seq")
     assert sorted(map(tuple, held.collect())) == sorted(
         map(tuple, want_held.collect())
     )
@@ -333,12 +333,10 @@ def test_run_job_retries_after_losing_commit_race(spark, tmp_path, monkeypatch):
     assert state.group.table("audit").read(spark).count() == 1
 
 
-def test_requeue_quarantine_backfills_held(spark, tmp_path):
-    """requeue_quarantine: after the root cause of a permanent gap is fixed,
-    quarantined chunks move back to the held cache (one atomic commit, age
-    reset) and the next pass emits the filled suffix exactly once."""
-    from log_aggregator_spark.job import requeue_quarantine
-
+def _quarantined_seq5(spark, tmp_path):
+    """Stream d ships seqs 1, 2, 5 and then two passes of unrelated docs
+    with held_max_age_runs=2: seq 5 ends up quarantined (chunks snapshot 3,
+    group snapshot 3). Returns (chunks table, routes, state)."""
     pdf = pd.DataFrame(
         {
             "doc_id": ["d"] * 3,
@@ -366,7 +364,23 @@ def test_requeue_quarantine_backfills_held(spark, tmp_path):
         )).select("envelope", "chunk_tokens", "source"))
         run_job(spark, ct, routes, state, held_max_age_runs=2)
     assert state.quarantine.read(spark).count() == 1  # seq 5 quarantined
+    return ct, routes, state
 
+
+def _ship_seqs_3_4(spark, ct):
+    ct.commit(encode_envelope(spark.createDataFrame(
+        [("d", 10, 3, [3], "src1"), ("d", 10, 4, [4], "src1")],
+        schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
+    )).select("envelope", "chunk_tokens", "source"))
+
+
+def test_requeue_quarantine_backfills_held(spark, tmp_path):
+    """requeue_quarantine: after the root cause of a permanent gap is fixed,
+    quarantined chunks move back to the held cache (one atomic commit, age
+    reset) and the next pass emits the filled suffix exactly once."""
+    from log_aggregator_spark.job import requeue_quarantine
+
+    ct, routes, state = _quarantined_seq5(spark, tmp_path)
     moved = requeue_quarantine(spark, state)
     assert moved == 1
     assert state.quarantine.read(spark).count() == 0
@@ -376,10 +390,7 @@ def test_requeue_quarantine_backfills_held(spark, tmp_path):
     assert held[0]["first_held_run"] == state.group.current_snapshot()
 
     # the missing chunks finally ship → one pass emits the suffix once
-    ct.commit(encode_envelope(spark.createDataFrame(
-        [("d", 10, 3, [3], "src1"), ("d", 10, 4, [4], "src1")],
-        schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
-    )).select("envelope", "chunk_tokens", "source"))
+    _ship_seqs_3_4(spark, ct)
     r = run_job(spark, ct, routes, state, held_max_age_runs=2)
     seg = state.routed.read(spark).where(
         (F.col("doc_id") == "d") & (F.col("run_id") == r["run_id"])
@@ -393,6 +404,42 @@ def test_requeue_quarantine_backfills_held(spark, tmp_path):
     snap_before = state.group.current_snapshot()
     assert requeue_quarantine(spark, state) == 0
     assert state.group.current_snapshot() == snap_before
+
+
+def test_sink_counts_are_per_pass_when_run_id_repeats(spark, tmp_path):
+    """run_job's sink_counts cover exactly the routed rows its own commit
+    added. The gap is filled BEFORE the requeue here, so the gap-fill pass
+    emits [3, 4] and a later pass with no new chunks emits the requeued
+    [5] — under the same run_id (no new chunks snapshot), which a run_id
+    filter could not tell apart."""
+    from log_aggregator_spark.job import requeue_quarantine
+
+    ct, routes, state = _quarantined_seq5(spark, tmp_path)
+
+    def routed_rows_per_sink():
+        rows = state.routed.read(spark).groupBy("sink").count().collect()
+        return {r["sink"]: r["count"] for r in rows}
+
+    def run_pass():
+        before = routed_rows_per_sink()
+        res = run_job(spark, ct, routes, state, held_max_age_runs=2)
+        after = routed_rows_per_sink()
+        added = {k: n - before.get(k, 0) for k, n in after.items()}
+        assert res["sink_counts"] == {k: n for k, n in added.items() if n}
+        return res
+
+    _ship_seqs_3_4(spark, ct)
+    gap_fill = run_pass()
+    assert requeue_quarantine(spark, state) == 1
+    held_only = run_pass()
+
+    assert gap_fill["run_id"] == held_only["run_id"] == 4
+    assert gap_fill["sink_counts"] == {"sinkA": 1}
+    assert held_only["sink_counts"] == {"sinkA": 1}
+    segs = state.routed.read(spark).where(
+        (F.col("doc_id") == "d") & (F.col("run_id") == 4)
+    ).collect()
+    assert sorted(list(r["tokens"]) for r in segs) == [[3, 4], [5]]
 
 
 def test_session_restart_across_runs(spark, tmp_path):

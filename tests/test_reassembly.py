@@ -2,8 +2,10 @@
 datadecoder has zero unit tests; §5.2 item 3 defines these cases from the
 code semantics of DataPumpDecoderSort.java:142-181 + SequenceTracker.java).
 
-Every case runs through BOTH physical strategies (applyInPandas kernel and the
-pure-SQL window plan) and must match the pure-pandas oracle exactly.
+Every case runs through the batch window plan (``reassemble_sql``), the
+pipeline's from-flags builder (``plan_from_flags``) and the streaming state
+kernel, and must match the pure-pandas oracles exactly — emitted streams and
+held chunks alike.
 """
 
 from __future__ import annotations
@@ -12,16 +14,15 @@ import pandas as pd
 import pytest
 
 from log_aggregator_spark.operators.reassemble import (
-    held_back,
-    reassemble,
-    reassemble_agg,
+    _gate_flags,
+    held_from_flags,
     reassemble_sql,
 )
+from log_aggregator_spark.oracle_pandas import held_oracle, reassemble_oracle
+from log_aggregator_spark.plans.pipeline import plan_from_flags
+from log_aggregator_spark.streaming.stream_pipeline import _make_gate
 
-STRATEGIES = {"pandas": reassemble, "sql": reassemble_sql, "agg": reassemble_agg}
-from log_aggregator_spark.oracle_pandas import reassemble_oracle
-
-from conftest import chunks_df, make_chunks
+from conftest import FakeState, chunks_df, make_chunks
 
 
 def _chunk(doc, sess, seq, toks, source="src0"):
@@ -37,8 +38,8 @@ CASES = {
         None,
     ),
     "duplicate_seq_diff_payload": (
-        # survivor among equal seqs = lexicographically-least payload, in
-        # every strategy (deterministic; NOT arrival order, which a shuffle
+        # survivor among equal seqs = lexicographically-least payload
+        # (deterministic; NOT arrival order, which a shuffle
         # destroys). [2,9] loses to [2,10]? no: [2,9] < [2,10] elementwise
         # lexicographic on values → [2,9] wins; [0,7] < [2,9] → [0,7] wins.
         [_chunk("a", 10, 1, [1]), _chunk("a", 10, 2, [2, 9]), _chunk("a", 10, 2, [0, 7]), _chunk("a", 10, 3, [3])],
@@ -118,50 +119,122 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-@pytest.mark.parametrize("strategy", sorted(STRATEGIES))
-@pytest.mark.parametrize("name", sorted(CASES))
-def test_gate_matches_oracle(spark, name, strategy):
-    rows, ckpt_rows = CASES[name]
-    df = chunks_df(spark, rows)
-    ckpt = _ckpt_df(spark, ckpt_rows)
-    fn = STRATEGIES[strategy]
-    got = _normalize(fn(df, ckpt).toPandas())
-    want = _normalize(
-        reassemble_oracle(
-            make_chunks(rows),
-            pd.DataFrame(ckpt_rows, columns=["doc_id", "session", "last_seq"])
-            if ckpt_rows
-            else None,
-        )
+def _ckpt_pdf(ckpt_rows):
+    if not ckpt_rows:
+        return None
+    return pd.DataFrame(ckpt_rows, columns=["doc_id", "session", "last_seq"])
+
+
+def _oracle(rows, ckpt_rows):
+    return _normalize(reassemble_oracle(make_chunks(rows), _ckpt_pdf(ckpt_rows)))
+
+
+def _normalize_held(pdf: pd.DataFrame) -> pd.DataFrame:
+    pdf = pdf.copy()
+    pdf["chunk_tokens"] = pdf["chunk_tokens"].apply(lambda a: [int(x) for x in a])
+    return (
+        pdf.sort_values(["doc_id", "session", "seq"]).reset_index(drop=True)
+        [["doc_id", "session", "seq", "chunk_tokens", "source"]]
+        .astype({"session": "int64", "seq": "int64"})
     )
-    pd.testing.assert_frame_equal(got, want)
 
 
-def test_strategies_agree_on_everything(spark):
-    """Union of all cases in one df — cross-strategy equivalence."""
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_gate_matches_oracle(spark, name):
+    rows, ckpt_rows = CASES[name]
+    got = reassemble_sql(chunks_df(spark, rows), _ckpt_df(spark, ckpt_rows))
+    pd.testing.assert_frame_equal(_normalize(got.toPandas()), _oracle(rows, ckpt_rows))
+
+
+def test_union_of_cases_matches_oracle(spark):
+    """All cases in one df (doc ids suffixed per case) — many streams per
+    partition, each gated independently. Checkpoint-free: a checkpoint row
+    would apply to every case sharing its stream key."""
     all_rows = []
     for i, (rows, _) in enumerate(CASES.values()):
         all_rows += [(f"{d}#{i}", s, q, t, src) for (d, s, q, t, src) in rows]
-    df = chunks_df(spark, all_rows)
-    a = _normalize(reassemble(df).toPandas())
-    b = _normalize(reassemble_sql(df).toPandas())
-    c = _normalize(reassemble_agg(df).toPandas())
-    pd.testing.assert_frame_equal(a, b)
-    pd.testing.assert_frame_equal(a, c)
+    got = _normalize(reassemble_sql(chunks_df(spark, all_rows)).toPandas())
+    pd.testing.assert_frame_equal(got, _oracle(all_rows, None))
+
+
+def _held(spark, rows, ckpt_rows):
+    flags = _gate_flags(chunks_df(spark, rows), _ckpt_df(spark, ckpt_rows))
+    return held_from_flags(flags).toPandas().sort_values("seq")
 
 
 def test_held_back(spark):
     rows, _ = CASES["gap_holds_suffix"]
-    df = chunks_df(spark, rows)
-    held = held_back(df).toPandas().sort_values("seq")
+    held = _held(spark, rows, None)
     assert list(held["seq"]) == [4, 5]
+    assert [list(t) for t in held["chunk_tokens"]] == [[4], [5]]
 
 
 def test_held_back_resume_blocked(spark):
     rows, ckpt_rows = CASES["resume_blocked"]
-    held = (
-        held_back(chunks_df(spark, rows), _ckpt_df(spark, ckpt_rows))
-        .toPandas()
-        .sort_values("seq")
+    assert list(_held(spark, rows, ckpt_rows)["seq"]) == [4, 5]
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_held_matches_oracle(spark, name):
+    rows, ckpt_rows = CASES[name]
+    flags = _gate_flags(chunks_df(spark, rows), _ckpt_df(spark, ckpt_rows))
+    got = _normalize_held(held_from_flags(flags).toPandas())
+    want = _normalize_held(held_oracle(make_chunks(rows), _ckpt_pdf(ckpt_rows)))
+    pd.testing.assert_frame_equal(got, want)
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_plan_from_flags_matches_oracle(spark, name):
+    """The one from-flags builder ``run_pipeline`` and ``run_job`` share:
+    reassembled streams and the checkpoint rows of the streams that
+    emitted, per case."""
+    rows, ckpt_rows = CASES[name]
+    routes = spark.createDataFrame(
+        [(src, "sinkA", 0) for src in sorted({r[4] for r in rows})],
+        schema="source string, sink string, priority int",
     )
-    assert list(held["seq"]) == [4, 5]
+    res = plan_from_flags(
+        _gate_flags(chunks_df(spark, rows), _ckpt_df(spark, ckpt_rows)), routes
+    )
+    want = _oracle(rows, ckpt_rows)
+    pd.testing.assert_frame_equal(_normalize(res.reassembled.toPandas()), want)
+    got_ckpt = (
+        res.checkpoint_out.toPandas()
+        .sort_values(["doc_id", "session"]).reset_index(drop=True)
+        .astype({"session": "int64", "last_seq": "int64"})
+    )
+    want_ckpt = want[["doc_id", "session", "last_seq_out"]].rename(
+        columns={"last_seq_out": "last_seq"}
+    )
+    pd.testing.assert_frame_equal(got_ckpt, want_ckpt)
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_stream_gate_matches_oracle(name):
+    """The streaming ``applyInPandasWithState`` kernel, driven per stream
+    with all of a case's chunks in one micro-batch; a checkpoint row
+    becomes the stream's starting state. Emitted segments and the held
+    buffer it leaves in state must match the oracles."""
+    rows, ckpt_rows = CASES[name]
+    chunks = make_chunks(rows)
+    ckpt = {(d, s): q for (d, s, q) in ckpt_rows or []}
+    gate = _make_gate(None)
+    emitted, held = [], []
+    for (doc_id, session), g in chunks.groupby(["doc_id", "session"], sort=True):
+        last = ckpt.get((doc_id, session))
+        st = FakeState(value=None if last is None else (last, [], [], None))
+        emitted += list(gate((doc_id, session), iter([g]), st))
+        _, held_seqs, held_tokens, source = st.get
+        held += [
+            (doc_id, session, q, t, source) for q, t in zip(held_seqs, held_tokens)
+        ]
+    got = (
+        pd.concat(emitted, ignore_index=True)
+        if emitted
+        else pd.DataFrame(columns=["doc_id", "session", "tokens", "n_tok", "source", "last_seq_out"])
+    )
+    pd.testing.assert_frame_equal(_normalize(got), _oracle(rows, ckpt_rows))
+    pd.testing.assert_frame_equal(
+        _normalize_held(make_chunks(held)),
+        _normalize_held(held_oracle(chunks, _ckpt_pdf(ckpt_rows))),
+    )

@@ -14,7 +14,7 @@ from log_aggregator_spark.operators.parse import encode_envelope
 from log_aggregator_spark.plans.pipeline import run_pipeline
 from log_aggregator_spark.streaming import stream_reassemble
 
-from conftest import SF_DIR
+from conftest import SF_DIR, FakeState
 
 
 def _write_batch(df, path):
@@ -323,33 +323,6 @@ def test_streaming_ttl_evicts_under_processing_time_trigger(spark, tmp_path):
         q.stop()
 
 
-class _FakeState:
-    """Minimal GroupState double for kernel-level tests."""
-
-    def __init__(self, value=None, timed_out=False):
-        self._value = value
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._value is not None and not self.removed
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, v):
-        self._value = v
-
-    def remove(self):
-        self.removed = True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_set = ms
-
-
 def test_state_ttl_kernel_eviction():
     """The TTL eviction decision, unit-tested at the kernel level (the
     integration form is blocked: ProcessingTimeTimeout keeps scheduling
@@ -363,13 +336,13 @@ def test_state_ttl_kernel_eviction():
     gate = _make_gate(500)
 
     # timed-out group: state dropped, nothing emitted
-    st = _FakeState(value=(2, [4], [[4]], "s"), timed_out=True)
+    st = FakeState(value=(2, [4], [[4]], "s"), timed_out=True)
     out = list(gate(("d", 10), iter([]), st))
     assert out == [] and st.removed and st.timeout_set is None
 
     # live group with data: emits, keeps state, re-arms the TTL
     pdf = pd.DataFrame({"seq": [1, 2], "chunk_tokens": [[1], [2]], "source": ["s", "s"]})
-    st2 = _FakeState()
+    st2 = FakeState()
     out2 = list(gate(("d", 10), iter([pdf]), st2))
     assert len(out2) == 1 and list(out2[0]["tokens"].iloc[0]) == [1, 2]
     assert st2.exists and st2.timeout_set == 500
@@ -377,13 +350,13 @@ def test_state_ttl_kernel_eviction():
     # after eviction, a revived stream re-anchors via the init rule:
     # fresh state, seq 3 alone is accepted (last == 0 accepts any first)
     pdf3 = pd.DataFrame({"seq": [3], "chunk_tokens": [[3]], "source": ["s"]})
-    st3 = _FakeState()
+    st3 = FakeState()
     out3 = list(gate(("d", 10), iter([pdf3]), st3))
     assert len(out3) == 1 and list(out3[0]["tokens"].iloc[0]) == [3]
 
     # no-TTL kernel: timeout APIs untouched
     gate_none = _make_gate(None)
-    st4 = _FakeState()
+    st4 = FakeState()
     list(gate_none(("d", 10), iter([pdf]), st4))
     assert st4.timeout_set is None
 
@@ -391,8 +364,8 @@ def test_state_ttl_kernel_eviction():
 def test_streaming_gate_duplicate_payload_survivor():
     """Kernel-level: duplicate seqs with DIFFERING payloads in one
     micro-batch — the streaming gate must emit the lexicographically-least
-    payload (the engine's survivor rule, shared with all batch
-    strategies), regardless of arrival order."""
+    payload (the engine's survivor rule, shared with the batch window
+    plan), regardless of arrival order."""
     from log_aggregator_spark.streaming.stream_pipeline import _make_gate
 
     gate = _make_gate(None)
@@ -403,7 +376,7 @@ def test_streaming_gate_duplicate_payload_survivor():
             "source": ["s"] * 4,
         }
     )
-    st = _FakeState()
+    st = FakeState()
     out = list(gate(("d", 10), iter([pdf]), st))
     assert len(out) == 1
     assert list(out[0]["tokens"].iloc[0]) == [1, 2, 4]  # seq2 survivor = [2,4]
